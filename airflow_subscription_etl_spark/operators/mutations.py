@@ -7,14 +7,18 @@ transform ``subs -> new_subs``; the caller persists via sources.io
 scale). Non-transactional read-modify-write semantics and the
 single-writer constraint are documented in SURVEY.md §7.4.1.
 
-Target-row selection for M2/M3 re-uses A1 (top-1 active sub per user),
-exactly like the reference re-locates the row before each update
-(subscription_flow.py:229, 237).
+Target-row selection for M2/M3 is one A1 locate
+(:func:`latest_active_subscription`, a single job); the UPDATE itself
+(:func:`update_subscription`) is lazy and keyed by subscription_id, so
+a caller that already located the row (``plans.pipeline``) pays no
+second locate.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from typing import Any
+
+from pyspark.sql import DataFrame, Row, Window
 from pyspark.sql import functions as F
 
 from .relational import (
@@ -22,31 +26,28 @@ from .relational import (
     coalesce_default,
     next_subscription_id,
     payment_status_for_price,
-    top1_per_key,
+    top1_per_key,  # noqa: F401 — perfbench's traced run wraps this name here
 )
 
-
-def _target_subscription_id(subs: DataFrame, user_id: int) -> int | None:
-    """A1: latest active subscription for the user; None if absent.
+def latest_active_subscription(subs: DataFrame, user_id: int) -> Row | None:
+    """A1 locate: the user's latest active row, or None if absent.
 
     Order: start_date (ISO string, lexicographic == chronological,
     decision D1) desc, subscription_id desc as deterministic tiebreak
     (decision D2 — the reference's Python ``max`` keeps file order,
     which is not a relational concept).
+
+    A sort-limit (``TakeOrderedAndProject``): one job, no shuffle, and
+    the whole row comes back, so one call answers both "no active
+    subscription" and which row to update.
     """
     rows = (
         active_subs_for_user(subs, user_id)
-        .transform(
-            lambda d: top1_per_key(
-                d,
-                "user_id",
-                [F.col("start_date").desc(), F.col("subscription_id").desc()],
-            )
-        )
-        .select("subscription_id")
+        .orderBy(F.col("start_date").desc(), F.col("subscription_id").desc())
+        .limit(1)
         .collect()
     )
-    return int(rows[0]["subscription_id"]) if rows else None
+    return rows[0] if rows else None
 
 
 def insert_subscription(
@@ -80,7 +81,7 @@ def _apply_via_merge(
     subs: DataFrame, target_id: int, set_exprs: dict[str, "F.Column"]
 ) -> DataFrame:
     """Express a single-row UPDATE as a MERGE: the source is the
-    A1-selected row with the SET columns overwritten; merge_upsert
+    target row with the SET columns overwritten; merge_upsert
     joins it back on subscription_id (matched → UPDATE; the key always
     matches, so the insert branch is provably empty). This is the
     1:1 shape of ``MERGE INTO subs USING cdc ON key WHEN MATCHED THEN
@@ -100,14 +101,21 @@ def _apply_via_merge(
     )
 
 
-def _apply_single_row_update(
+def _check_strategy(strategy: str) -> None:
+    if strategy not in ("projection", "merge"):
+        raise ValueError(f"unknown strategy: {strategy!r}")
+
+
+def update_subscription(
     subs: DataFrame,
-    user_id: int,
-    set_exprs: dict[str, "F.Column"],
-    strategy: str,
+    subscription_id: int,
+    values: dict[str, Any],
+    strategy: str = "projection",
 ) -> DataFrame:
     """Shared M2/M3 writer interface (SURVEY §7.4: "do both behind one
-    writer interface"). ``strategy``:
+    writer interface"): set ``values`` (column → literal, cast to the
+    column's type) on the row with ``subscription_id``. Lazy — no
+    Spark job runs until the caller's action. ``strategy``:
 
     - ``"projection"`` (default): conditional ``withColumn`` over the
       full table — narrow, order-preserving, the Spark equivalent of
@@ -119,20 +127,15 @@ def _apply_single_row_update(
       passes through untouched instead of being rewritten.
 
     Both strategies produce identical rows (equivalence is pinned in
-    tests/test_round6_ops.py); both raise the reference's error when
-    the user has no active subscription (subscription_flow.py:229,237).
+    tests/test_round6_ops.py).
     """
-    # validate BEFORE the A1 Spark job: a typoed strategy must fail
-    # fast with the right message, not after (or masked by) the
-    # target-row lookup
-    if strategy not in ("projection", "merge"):
-        raise ValueError(f"unknown strategy: {strategy!r}")
-    target = _target_subscription_id(subs, user_id)
-    if target is None:
-        raise ValueError(f"No active subscription found for user_id {user_id}")
+    _check_strategy(strategy)
+    set_exprs = {
+        c: F.lit(v).cast(subs.schema[c].dataType) for c, v in values.items()
+    }
     if strategy == "merge":
-        return _apply_via_merge(subs, target, set_exprs)
-    is_target = F.col("subscription_id") == F.lit(target)
+        return _apply_via_merge(subs, subscription_id, set_exprs)
+    is_target = F.col("subscription_id") == F.lit(subscription_id)
     out = subs
     for col, expr in set_exprs.items():
         out = out.withColumn(
@@ -141,18 +144,31 @@ def _apply_single_row_update(
     return out
 
 
+def _update_latest_active(
+    subs: DataFrame, user_id: int, values: dict[str, Any], strategy: str
+) -> DataFrame:
+    """Locate (one job) then :func:`update_subscription` (lazy); raises
+    the reference's error when the user has no active subscription
+    (subscription_flow.py:229, 237)."""
+    # validate BEFORE the A1 Spark job: a typoed strategy must fail
+    # fast with the right message, not after (or masked by) the
+    # target-row lookup
+    _check_strategy(strategy)
+    target = latest_active_subscription(subs, user_id)
+    if target is None:
+        raise ValueError(f"No active subscription found for user_id {user_id}")
+    return update_subscription(subs, target["subscription_id"], values, strategy)
+
+
 def change_subscription_plan(
     subs: DataFrame, user_id: int, new_plan_id: int, strategy: str = "projection"
 ) -> DataFrame:
     """M2: UPDATE subscription_plan_id on the A1-selected row
     (subscription_flow.py:228–234) — see
-    :func:`_apply_single_row_update` for the projection/merge strategy
+    :func:`update_subscription` for the projection/merge strategy
     choice."""
-    return _apply_single_row_update(
-        subs,
-        user_id,
-        {"subscription_plan_id": F.lit(new_plan_id).cast("int")},
-        strategy,
+    return _update_latest_active(
+        subs, user_id, {"subscription_plan_id": new_plan_id}, strategy
     )
 
 
@@ -161,10 +177,10 @@ def cancel_subscription(
 ) -> DataFrame:
     """M3: soft delete — status → "inactive" on the A1-selected row
     (subscription_flow.py:236–242) — see
-    :func:`_apply_single_row_update` for the projection/merge strategy
+    :func:`update_subscription` for the projection/merge strategy
     choice."""
-    return _apply_single_row_update(
-        subs, user_id, {"subscription_status": F.lit("inactive")}, strategy
+    return _update_latest_active(
+        subs, user_id, {"subscription_status": "inactive"}, strategy
     )
 
 

@@ -15,8 +15,8 @@ Scale posture per operator family:
   executors this is the canonical window pattern. When only the
   max-row is needed, ``max_by(struct(*), key)`` gives map-side partial
   aggregation (less shuffle IO than row_number over raw rows).
-- A2 global max: an ``agg(max)`` tree-reduces; the scalar result is
-  one row. The max+1 *allocation* serializes writers by design
+- A2 global max: a top-1 sort-limit (per-partition top-1, merged on
+  the driver; no exchange). The max+1 *allocation* serializes writers by design
   (reference semantics, subscription_flow.py:214); a scale deployment
   swaps the strategy (see ``next_subscription_id``).
 """
@@ -178,10 +178,16 @@ def next_subscription_id(subs: DataFrame, strategy: str = "max_plus_one") -> Col
     ids) or ``"uuid"`` behind the same interface (SURVEY.md §7.4.3).
     """
     if strategy == "max_plus_one":
-        row = subs.agg(
-            (F.coalesce(F.max("subscription_id"), F.lit(1000)) + F.lit(1)).alias("next_id")
-        ).collect()[0]
-        return int(row["next_id"])
+        # top-1 by id (sort-limit): one job, no exchange, where an
+        # agg(max) plans a single-partition exchange (2 jobs under AQE)
+        top = (
+            subs.select("subscription_id")
+            .orderBy(F.col("subscription_id").desc())
+            .limit(1)
+            .collect()
+        )
+        ids = [r[0] for r in top if r[0] is not None]
+        return max(ids + [1000]) + 1
     if strategy == "monotonic":
         return F.monotonically_increasing_id() + F.lit(1001)
     if strategy == "uuid":

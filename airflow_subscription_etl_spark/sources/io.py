@@ -70,21 +70,34 @@ def write_json_table(
     old file: Spark plans are lazy and re-read the (now mutated) source
     on every later action — the read-overwrite-reread trap.
 
-    Raises ``ValueError`` if the table exceeds ``max_rows`` (cheap
-    ``limit(max_rows+1).count()`` probe — never materializes the
-    overage): this sink is driver-materializing by design and the guard
-    keeps it from being silently pointed at a fact table. Use
-    :func:`write_parquet_table` for anything big.
+    Raises ``ValueError`` if the table exceeds ``max_rows``: this sink
+    is driver-materializing by design and the guard keeps it from being
+    silently pointed at a fact table. Use :func:`write_parquet_table`
+    for anything big. The guard rides on the one materializing job:
+    the input is coalesced to a single partition (no shuffle) under a
+    ``limit(max_rows + 1)``, so the driver never holds more than
+    ``max_rows + 1`` rows and a multi-partition input (an M1 union)
+    still runs as one job. A position tag taken before the coalesce
+    restores the input's row order on the driver.
     """
-    overflow = df.limit(max_rows + 1).count()
-    if overflow > max_rows:
+    from pyspark.sql import functions as F
+
+    pos = "__write_pos"
+    got = (
+        df.withColumn(pos, F.monotonically_increasing_id())
+        .coalesce(1)
+        .limit(max_rows + 1)
+        .collect()
+    )
+    if len(got) > max_rows:
         raise ValueError(
             f"write_json_table is a driver-materializing catalog sink; "
             f"table has > {max_rows} rows — use write_parquet_table"
         )
+    got.sort(key=lambda r: r[pos])
     rows = [
-        {k: v for k, v in row.asDict().items() if v is not None}
-        for row in df.collect()
+        {k: v for k, v in row.asDict().items() if v is not None and k != pos}
+        for row in got
     ]
     d = os.path.dirname(os.path.abspath(path)) or "."
     fd, tmp = tempfile.mkstemp(dir=d, suffix=".json.tmp")

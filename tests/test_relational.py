@@ -103,6 +103,15 @@ def test_a2_next_id_empty_table_floor(spark, subs):
     assert R.next_subscription_id(empty) == 1001
 
 
+@pytest.mark.parametrize("ids, expected", [([5, 7], 1001), ([], 1001), ([1002], 1003)])
+def test_a2_next_id_floor_applies_below_1000(spark, ids, expected):
+    """A2 is ``max(ids + [1000]) + 1``: ids all under the floor still
+    allocate 1001, not max + 1."""
+    rows = [(i, 101, 1, "active", "2025-01-01", "2025-12-31", None) for i in ids]
+    subs = spark.createDataFrame(rows, USER_SUBSCRIPTIONS_SCHEMA)
+    assert R.next_subscription_id(subs) == expected
+
+
 def test_a3_is_empty(subs):
     assert not R.is_empty(subs)
     assert R.is_empty(subs.filter(F.col("user_id") == 999))

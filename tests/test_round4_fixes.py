@@ -4,6 +4,8 @@ weight quantization, reservoir weight guard, empty expectations)."""
 
 from __future__ import annotations
 
+import json
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -87,6 +89,48 @@ def test_write_json_table_guards_big_tables(spark, tmp_path):
     small = spark.range(10).selectExpr("id", "id * 2 AS v")
     rows = write_json_table(small, str(tmp_path / "s.json"), max_rows=10)
     assert len(rows) == 10
+    # a 2-partition union of two JSON scans (the M1 create shape): exactly
+    # at the bound it writes every row in input order, in one job; one
+    # row over, it raises
+    def scan(name, ids):
+        p = tmp_path / name
+        p.write_text(json.dumps([{"id": i} for i in ids]))
+        return spark.read.schema("id long").option("multiLine", True).json(str(p))
+
+    at_bound = scan("a.json", range(6)).union(scan("b.json", range(6, 10)))
+    assert at_bound.rdd.getNumPartitions() == 2
+    sc = spark.sparkContext
+    sc.setJobGroup("write_json_table-union", "write_json_table-union")
+    try:
+        rows = write_json_table(at_bound, str(tmp_path / "u.json"), max_rows=10)
+        assert len(sc.statusTracker().getJobIdsForGroup("write_json_table-union")) == 1
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert [r["id"] for r in rows] == list(range(10))
+    assert json.load(open(tmp_path / "u.json")) == rows
+    over = scan("a.json", range(6)).union(scan("c.json", range(6, 11)))
+    assert over.rdd.getNumPartitions() == 2
+    with pytest.raises(ValueError, match="driver-materializing"):
+        write_json_table(over, str(tmp_path / "o.json"), max_rows=10)
+    assert not (tmp_path / "o.json").exists()
+
+
+def test_write_json_table_keeps_input_order_across_partitions(spark, tmp_path):
+    """coalesce(1) puts a partition with a preferred location (here a
+    cached one) ahead of the others; the sink still writes the input's
+    row order."""
+    from airflow_subscription_etl_spark.sources.io import write_json_table
+
+    sc = spark.sparkContext
+    head = spark.createDataFrame(sc.parallelize([(i,) for i in range(3)], 1), "id long")
+    tail = spark.createDataFrame(sc.parallelize([(i,) for i in range(3, 6)], 1), "id long")
+    tail.cache().count()
+    try:
+        rows = write_json_table(head.union(tail), str(tmp_path / "t.json"))
+    finally:
+        tail.unpersist()
+    assert [r["id"] for r in rows] == list(range(6))
 
 
 def test_enforce_expectations_empty_rules_raise(spark):
