@@ -84,7 +84,11 @@ def assign_clusters(
     (and its generated code) is byte-identical across iterations, so
     codegen compiles once; this is also exactly how the matrix would
     ship to 1000 executors at scale (one broadcast, not a megabyte
-    plan)."""
+    plan).
+
+    This interpreted-HOF form is the reference kernel: the Lloyd loop
+    runs :func:`assign_clusters_pandas`, and the parity tests pin the
+    two equal."""
     spark = df.sparkSession
     from pyspark.sql import types as T  # noqa: PLC0415
 
@@ -161,9 +165,7 @@ def assign_clusters_pandas(
     (same integer-micro distances, same lowest-id argmin tiebreak via
     numpy's first-minimum), with the k·d distance fold running as
     vectorized batch math instead of interpreted higher-order
-    functions. The established throughput-twin pattern
-    (brute_force_topk_pandas, pq_topk_pandas); both paths check
-    against the SAME oracle.
+    functions. It is the kernel every :func:`kmeans_fit` round runs.
 
     Rounding parity: the bulk path is vectorized ``floor(v+0.5)``,
     but Spark's ``F.round`` is BigDecimal(Double.toString) HALF_UP and
@@ -216,7 +218,6 @@ def kmeans_fit(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     keep_vec: bool = False,
-    assign_fn=None,
 ) -> tuple[DataFrame, list[list[float]]]:
     """Lloyd's k-means, ``iters`` rounds from a deterministic init (the
     k lowest-id vectors, micro-quantized). Returns the FINAL-round
@@ -231,28 +232,29 @@ def kmeans_fit(
     iterative-ML posture — MLlib does the same; at 100 TB you cache a
     sample or accept the re-scan).
 
-    ``assign_fn`` defaults to the Arrow/numpy twin (bit-identical to
-    the HOF reference — consistent with :func:`kmeans_fit_predict`'s
-    ``impl="pandas"`` default since r7); pass ``assign_clusters`` for
-    the interpreted reference kernel.
+    Every round assigns with :func:`assign_clusters_pandas`, which is
+    bit-identical to the HOF reference :func:`assign_clusters`. Raises
+    ``ValueError`` when the input has fewer than ``k`` rows: the init
+    needs k seed vectors, and fewer would silently yield fewer
+    clusters.
     """
-    # default kernel = the Arrow/numpy twin, CONSISTENT with
-    # kmeans_fit_predict's default (bit-identical to assign_clusters on
-    # all inputs — see _round_like_spark); pass assign_fn for the
-    # interpreted HOF reference kernel
-    assign = assign_fn or assign_clusters_pandas
     # cached for the Lloyd iterations (standard iterative-ML posture);
     # pin()-ed to the returned assignment so library callers can free
     # it via cache.release / cache.released — the harnesses' clearCache
     # also works (see cache.py)
     df = df.select(id_col, vec_col).cache()
     init_rows = df.orderBy(id_col).limit(k).select(vec_col).collect()
+    if len(init_rows) < k:
+        df.unpersist()
+        raise ValueError(
+            f"kmeans_fit needs at least k={k} rows, got {len(init_rows)}"
+        )
     cents = [[_quant(float(x)) for x in r[vec_col]] for r in init_rows]
     dim = len(cents[0])
     # iters assignments interleaved with iters-1 updates:
     # a_i = assign(c_{i-1}); c_i = update(a_i); return a_iters
     for _ in range(iters - 1):
-        assigned = assign(df, cents, id_col, vec_col, keep_vec=True)
+        assigned = assign_clusters_pandas(df, cents, id_col, vec_col, keep_vec=True)
         sums = (
             assigned
             .select("cluster_id", F.posexplode(F.col(vec_col)).alias("dim0", "x"))
@@ -274,7 +276,8 @@ def kmeans_fit(
             ) / (float(r["n"]) * float(_SCALE))
         # empty clusters (absent from `new`) keep their previous centroid
         cents = [new.get(cid, cents[cid - 1]) for cid in range(1, k + 1)]
-    return pin(assign(df, cents, id_col, vec_col, keep_vec=keep_vec), df), cents
+    assigned = assign_clusters_pandas(df, cents, id_col, vec_col, keep_vec=keep_vec)
+    return pin(assigned, df), cents
 
 
 def kmeans_fit_predict(
@@ -284,40 +287,9 @@ def kmeans_fit_predict(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     keep_vec: bool = False,
-    impl: str = "pandas",
 ) -> DataFrame:
-    """Assignment-only wrapper of :func:`kmeans_fit`.
-
-    ``impl`` picks the per-round assignment kernel — ``"pandas"``
-    (default) runs the Arrow/numpy twin (~3× faster at sf0.1; the
-    single most expensive headline query before this flip), ``"hof"``
-    the interpreted higher-order-function reference. The twin is
-    bit-identical (assign_clusters_pandas replicates F.round exactly,
-    boundary doubles included), so BOTH impls satisfy the same
-    unrolled-CTE oracle — the semantic_dedup / pq_ann_topk
-    default-to-throughput precedent."""
-    if impl not in ("pandas", "hof"):
-        raise ValueError(f"impl must be 'pandas' or 'hof', got {impl!r}")
-    assign = assign_clusters_pandas if impl == "pandas" else assign_clusters
-    return kmeans_fit(df, k, iters, id_col, vec_col, keep_vec, assign_fn=assign)[0]
-
-
-def kmeans_fit_predict_pandas(
-    df: DataFrame,
-    k: int = 8,
-    iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    keep_vec: bool = False,
-) -> DataFrame:
-    """:func:`kmeans_fit_predict` with the Arrow/numpy assignment twin
-    on every Lloyd round — bit-identical output (integer-micro
-    distances are order-free), vectorized per-row cost. Since r7 this
-    is exactly the default (``impl="pandas"``); the name is kept as the
-    stable explicit-twin entry point (the emb_kmeans_pandas query and
-    prior callers), delegating so there is one implementation to
-    maintain."""
-    return kmeans_fit_predict(df, k, iters, id_col, vec_col, keep_vec, impl="pandas")
+    """Assignment-only wrapper of :func:`kmeans_fit`."""
+    return kmeans_fit(df, k, iters, id_col, vec_col, keep_vec)[0]
 
 
 def semantic_dedup(
@@ -327,7 +299,6 @@ def semantic_dedup(
     threshold: float = 0.9,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str = "pandas",
 ) -> DataFrame:
     """SemDeDup-style embedding dedup (Abbas et al. 2023, "SemDeDup:
     Data-efficient learning at web-scale through semantic
@@ -347,20 +318,9 @@ def semantic_dedup(
     the LOWEST id of each near-duplicate pair (deterministic,
     join-free) instead of the vector farthest from the centroid.
 
-    ``impl`` picks the k-means assignment kernel — ``"pandas"``
-    (default) runs the Arrow/numpy twin, ``"hof"`` the interpreted
-    higher-order-function reference; the twin is bit-identical
-    (assign_clusters_pandas replicates F.round exactly, boundary
-    doubles included), so BOTH impls satisfy the same oracle — the
-    pq_ann_topk default-to-throughput precedent.
-
     Returns ``(id, cluster_id, is_dropped)`` for every input row.
     """
-    if impl not in ("pandas", "hof"):
-        raise ValueError(f"impl must be 'pandas' or 'hof', got {impl!r}")
-    assigned = kmeans_fit_predict(
-        df, k, iters, id_col, vec_col, keep_vec=True, impl=impl
-    )
+    assigned = kmeans_fit_predict(df, k, iters, id_col, vec_col, keep_vec=True)
     # quantize + self-norm map-side, BEFORE the pair join: per-pair
     # work is then a bare integer dot product (same staging as
     # similarity.all_pairs_ann). |q| ≤ ~1e6 ⇒ dot ≤ dims·1e12 — int64-

@@ -9,9 +9,9 @@ single-writer constraint are documented in SURVEY.md §7.4.1.
 
 Target-row selection for M2/M3 is one A1 locate
 (:func:`latest_active_subscription`, a single job); the UPDATE itself
-(:func:`update_subscription`) is lazy and keyed by subscription_id, so
-a caller that already located the row (``plans.pipeline``) pays no
-second locate.
+(:func:`update_subscription`) is a lazy conditional projection keyed
+by subscription_id, so a caller that already located the row
+(``plans.pipeline``) pays no second locate.
 """
 
 from __future__ import annotations
@@ -77,64 +77,24 @@ def insert_subscription(
     return subs.unionByName(new_row, allowMissingColumns=True)
 
 
-def _apply_via_merge(
-    subs: DataFrame, target_id: int, set_exprs: dict[str, "F.Column"]
-) -> DataFrame:
-    """Express a single-row UPDATE as a MERGE: the source is the
-    target row with the SET columns overwritten; merge_upsert
-    joins it back on subscription_id (matched → UPDATE; the key always
-    matches, so the insert branch is provably empty). This is the
-    1:1 shape of ``MERGE INTO subs USING cdc ON key WHEN MATCHED THEN
-    UPDATE SET ...`` — on Delta/Iceberg the same source frame feeds
-    ``DeltaTable.merge`` / ``MERGE INTO`` and the table format turns
-    the full rewrite into a file-level upsert. Row order of the result
-    follows the merge join, not the input file; callers needing
-    reference file order sort by subscription_id (M1 assigns max+1, so
-    id order IS file order).
-    """
-    source = subs.filter(F.col("subscription_id") == F.lit(target_id)).select(
-        F.col("subscription_id"),
-        *[e.alias(c) for c, e in set_exprs.items()],
-    )
-    return merge_upsert(
-        subs, source, ["subscription_id"], update_cols=list(set_exprs)
-    )
-
-
-def _check_strategy(strategy: str) -> None:
-    if strategy not in ("projection", "merge"):
-        raise ValueError(f"unknown strategy: {strategy!r}")
-
-
 def update_subscription(
     subs: DataFrame,
     subscription_id: int,
     values: dict[str, Any],
-    strategy: str = "projection",
 ) -> DataFrame:
-    """Shared M2/M3 writer interface (SURVEY §7.4: "do both behind one
-    writer interface"): set ``values`` (column → literal, cast to the
-    column's type) on the row with ``subscription_id``. Lazy — no
-    Spark job runs until the caller's action. ``strategy``:
+    """Shared M2/M3 writer (SURVEY §7.4: "do both behind one writer
+    interface"): set ``values`` (column → literal, cast to the column's
+    type) on the row with ``subscription_id``. Lazy — no Spark job runs
+    until the caller's action.
 
-    - ``"projection"`` (default): conditional ``withColumn`` over the
-      full table — narrow, order-preserving, the Spark equivalent of
-      the reference's in-place row edit + full-file save. Right for
-      the catalog-sized JSON-parity table.
-    - ``"merge"``: the same update expressed through
-      :func:`merge_upsert` — the scale path that maps 1:1 onto a
-      lakehouse ``MERGE INTO`` (Delta/Iceberg), where unmatched data
-      passes through untouched instead of being rewritten.
-
-    Both strategies produce identical rows (equivalence is pinned in
-    tests/test_round6_ops.py).
+    A conditional ``withColumn`` over the full table: narrow and
+    order-preserving, the Spark equivalent of the reference's in-place
+    row edit + full-file save. The MERGE INTO form for keyed change
+    batches is :func:`merge_upsert`.
     """
-    _check_strategy(strategy)
     set_exprs = {
         c: F.lit(v).cast(subs.schema[c].dataType) for c, v in values.items()
     }
-    if strategy == "merge":
-        return _apply_via_merge(subs, subscription_id, set_exprs)
     is_target = F.col("subscription_id") == F.lit(subscription_id)
     out = subs
     for col, expr in set_exprs.items():
@@ -145,43 +105,31 @@ def update_subscription(
 
 
 def _update_latest_active(
-    subs: DataFrame, user_id: int, values: dict[str, Any], strategy: str
+    subs: DataFrame, user_id: int, values: dict[str, Any]
 ) -> DataFrame:
     """Locate (one job) then :func:`update_subscription` (lazy); raises
     the reference's error when the user has no active subscription
     (subscription_flow.py:229, 237)."""
-    # validate BEFORE the A1 Spark job: a typoed strategy must fail
-    # fast with the right message, not after (or masked by) the
-    # target-row lookup
-    _check_strategy(strategy)
     target = latest_active_subscription(subs, user_id)
     if target is None:
         raise ValueError(f"No active subscription found for user_id {user_id}")
-    return update_subscription(subs, target["subscription_id"], values, strategy)
+    return update_subscription(subs, target["subscription_id"], values)
 
 
 def change_subscription_plan(
-    subs: DataFrame, user_id: int, new_plan_id: int, strategy: str = "projection"
+    subs: DataFrame, user_id: int, new_plan_id: int
 ) -> DataFrame:
     """M2: UPDATE subscription_plan_id on the A1-selected row
-    (subscription_flow.py:228–234) — see
-    :func:`update_subscription` for the projection/merge strategy
-    choice."""
+    (subscription_flow.py:228–234)."""
     return _update_latest_active(
-        subs, user_id, {"subscription_plan_id": new_plan_id}, strategy
+        subs, user_id, {"subscription_plan_id": new_plan_id}
     )
 
 
-def cancel_subscription(
-    subs: DataFrame, user_id: int, strategy: str = "projection"
-) -> DataFrame:
+def cancel_subscription(subs: DataFrame, user_id: int) -> DataFrame:
     """M3: soft delete — status → "inactive" on the A1-selected row
-    (subscription_flow.py:236–242) — see
-    :func:`update_subscription` for the projection/merge strategy
-    choice."""
-    return _update_latest_active(
-        subs, user_id, {"subscription_status": "inactive"}, strategy
-    )
+    (subscription_flow.py:236–242)."""
+    return _update_latest_active(subs, user_id, {"subscription_status": "inactive"})
 
 
 def merge_upsert(

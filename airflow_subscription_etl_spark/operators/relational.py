@@ -1,4 +1,4 @@
-"""Relational operators (SURVEY.md §2.2–§2.5): P1–P6, J1–J4, A1–A3, E1–E6.
+"""Relational operators (SURVEY.md §2.2–§2.5): P1–P6, J1/J4, A1–A2, E1–E6.
 
 Each operator is a pure ``DataFrame -> DataFrame`` transform, composable
 via ``df.transform(...)``. Everything stays JVM-side (built-in
@@ -12,13 +12,14 @@ Scale posture per operator family:
   ``F.broadcast`` hint — zero shuffle; fact-fact joins shuffle on the
   key and AQE handles skew.
 - A1 top-1-per-key: a single shuffle on the partition key; at 1000
-  executors this is the canonical window pattern. When only the
-  max-row is needed, ``max_by(struct(*), key)`` gives map-side partial
-  aggregation (less shuffle IO than row_number over raw rows).
+  executors this is the canonical window pattern.
 - A2 global max: a top-1 sort-limit (per-partition top-1, merged on
   the driver; no exchange). The max+1 *allocation* serializes writers by design
-  (reference semantics, subscription_flow.py:214); a scale deployment
-  swaps the strategy (see ``next_subscription_id``).
+  (reference semantics, subscription_flow.py:214).
+
+J2/J3 (required lookups) and A3 (existence checks) live in
+``plans.pipeline.run_intent``: they are answered by its one catalog
+collect and by ``mutations.latest_active_subscription``.
 """
 
 from __future__ import annotations
@@ -103,32 +104,6 @@ def lookup_join(
     return fact.join(F.broadcast(dim), on=on, how=how)
 
 
-def lookup_required(
-    fact: DataFrame,
-    dim: DataFrame,
-    on: str | Sequence[str],
-    error: str,
-) -> DataFrame:
-    """J2/J3: lookup that must match, with custom error parity
-    (subscription_flow.py:177–179, 207–209).
-
-    Left join + emptiness check preserves the reference's explicit
-    ``ValueError`` message instead of silently dropping rows.
-
-    The no-match probe is an explicit join-indicator column, not a
-    null test on the first dim attribute (r12 review): a matched dim
-    row whose first attribute is legitimately NULL is not a missing
-    match, and a key-only dim has no attribute to test at all — the
-    old probe raised on the former and silently skipped the required
-    check on the latter.
-    """
-    marked = dim.withColumn("__matched", F.lit(True))
-    joined = fact.join(F.broadcast(marked), on=on, how="left")
-    if joined.filter(F.col("__matched").isNull()).limit(1).count() > 0:
-        raise ValueError(error)
-    return joined.drop("__matched")
-
-
 # --- A: aggregations --------------------------------------------------------
 
 
@@ -144,9 +119,7 @@ def top1_per_key(
     require the caller to pass a *total* order (decision D2: e.g.
     ``[start_date.desc(), subscription_id.desc()]``).
 
-    One shuffle on ``key``; AQE splits skewed partitions. The window
-    variant keeps all columns; for narrow outputs prefer
-    :func:`argmax_per_key` (map-side partial agg).
+    One shuffle on ``key``; AQE splits skewed partitions.
     """
     keys = [key] if isinstance(key, str) else list(key)
     w = Window.partitionBy(*keys).orderBy(*order)
@@ -157,51 +130,22 @@ def top1_per_key(
     )
 
 
-def argmax_per_key(df: DataFrame, key: str | Sequence[str], order_col: Column) -> DataFrame:
-    """A1 (agg form): ``groupBy(key).agg(max_by(struct(*), order_col))``.
-
-    Partial-aggregates map-side before the shuffle — at scale this moves
-    one struct per key per partition instead of every row.
-    """
-    keys = [key] if isinstance(key, str) else list(key)
-    payload = F.struct(*[F.col(c) for c in df.columns])
-    out = df.groupBy(*keys).agg(F.max_by(payload, order_col).alias("__row"))
-    return out.select(*[F.col(f"__row.{c}").alias(c) for c in df.columns])
-
-
-def next_subscription_id(subs: DataFrame, strategy: str = "max_plus_one") -> Column | int:
+def next_subscription_id(subs: DataFrame) -> int:
     """A2: ID allocation (subscription_flow.py:214):
     ``max([ids] + [1000]) + 1`` — empty table → 1001 (decision D4).
 
-    ``max_plus_one`` is reference-faithful but serializes writers; at
-    scale pass ``strategy="monotonic"`` (collision-free per-partition
-    ids) or ``"uuid"`` behind the same interface (SURVEY.md §7.4.3).
+    Reference-faithful, so it serializes writers (SURVEY.md §7.4.3).
     """
-    if strategy == "max_plus_one":
-        # top-1 by id (sort-limit): one job, no exchange, where an
-        # agg(max) plans a single-partition exchange (2 jobs under AQE)
-        top = (
-            subs.select("subscription_id")
-            .orderBy(F.col("subscription_id").desc())
-            .limit(1)
-            .collect()
-        )
-        ids = [r[0] for r in top if r[0] is not None]
-        return max(ids + [1000]) + 1
-    if strategy == "monotonic":
-        return F.monotonically_increasing_id() + F.lit(1001)
-    if strategy == "uuid":
-        return F.expr("uuid()")
-    raise ValueError(f"unknown id strategy: {strategy}")
-
-
-def is_empty(df: DataFrame) -> bool:
-    """A3: emptiness/existence check (subscription_flow.py:99–100 etc.).
-
-    ``limit(1)`` keeps the action O(first partition with a row), not a
-    full count.
-    """
-    return df.limit(1).count() == 0
+    # top-1 by id (sort-limit): one job, no exchange, where an
+    # agg(max) plans a single-partition exchange (2 jobs under AQE)
+    top = (
+        subs.select("subscription_id")
+        .orderBy(F.col("subscription_id").desc())
+        .limit(1)
+        .collect()
+    )
+    ids = [r[0] for r in top if r[0] is not None]
+    return max(ids + [1000]) + 1
 
 
 # --- E: scalar expressions --------------------------------------------------

@@ -2335,31 +2335,6 @@ def pq_topk_pandas(
     ).limit(k)
 
 
-def pq_ann_topk(
-    df: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    m: int = 4,
-    n_codes: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    impl: str = "pandas",
-) -> DataFrame:
-    """THE entry point for PQ retrieval. Dispatches to the Arrow/numpy
-    scorer by default (``impl="pandas"`` → :func:`pq_topk_pandas`, the
-    declared throughput path — ~3× faster than the interpreted-HOF
-    form at sf0.1) so a bulk-encode pipeline never lands on the
-    reference implementation by accident; ``impl="hof"`` selects
-    :func:`pq_topk`, the engine-portable pure-SQL reference both are
-    oracle-checked against. Results are bit-identical either way
-    (integer-micro distances, order-free sums)."""
-    if impl == "pandas":
-        return pq_topk_pandas(df, query_vec, k, m, n_codes, id_col, vec_col)
-    if impl == "hof":
-        return pq_topk(df, query_vec, k, m, n_codes, id_col, vec_col)
-    raise ValueError(f"unknown impl={impl!r} (expected 'pandas' or 'hof')")
-
-
 def ivfpq_topk(
     df: DataFrame,
     query_vec: list[float],

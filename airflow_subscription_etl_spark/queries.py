@@ -4408,12 +4408,11 @@ def q_emb_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     accumulators, so even this loop hash-matches a DuckDB oracle (the
     oracle unrolls the iterations as CTEs; see kmeans_oracle_sql).
 
-    Runs kmeans_fit_predict's DEFAULT kernel — since r7 the Arrow/numpy
-    assignment twin (bit-identical to the HOF reference on all inputs;
-    ~3× faster at sf0.1, previously the single most expensive headline
-    query). The interpreted-HOF reference kernel stays selectable
-    (impl="hof") and is pinned to the twin by the parity tests in
-    tests/test_clustering.py and tests/test_round6_fixes.py."""
+    Every Lloyd round assigns with the Arrow/numpy kernel
+    (assign_clusters_pandas; ~3× faster at sf0.1 than the interpreted-
+    HOF form). The HOF reference kernel, assign_clusters, is pinned
+    bit-identical to it by the parity tests in tests/test_clustering.py
+    and tests/test_round6_fixes.py."""
     from .operators.clustering import (  # noqa: PLC0415
         kmeans_cluster_summary,
         kmeans_fit_predict,
@@ -8871,18 +8870,17 @@ SELECT '3_near_dedup', CAST(COUNT(*) AS BIGINT),
 
 
 def q_emb_kmeans_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Arrow/numpy twin of emb_kmeans (clustering.py::
-    kmeans_fit_predict_pandas): every Lloyd assignment round runs as
-    vectorized batch math instead of interpreted HOFs — ~3× faster at
-    sf0.1, BIT-IDENTICAL output (integer-micro distances are
-    order-free), checked against the SAME unrolled-CTE oracle."""
+    """Same plan as emb_kmeans (clustering.py::kmeans_fit_predict,
+    whose Lloyd rounds run the Arrow/numpy kernel); the name stays
+    registered so its oracle row and results are unchanged. Checked
+    against the SAME unrolled-CTE oracle."""
     from .operators.clustering import (  # noqa: PLC0415
         kmeans_cluster_summary,
-        kmeans_fit_predict_pandas,
+        kmeans_fit_predict,
     )
 
     emb = _t(spark, sf_dir, "embeddings")
-    return kmeans_cluster_summary(kmeans_fit_predict_pandas(emb, k=8, iters=3))
+    return kmeans_cluster_summary(kmeans_fit_predict(emb, k=8, iters=3))
 
 
 def q_emb_rp_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8897,8 +8895,8 @@ def q_emb_rp_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-for-bit.
 
     Runs the Arrow/numpy twin (random_projection_topk_pandas) — the
-    default-to-throughput pattern (pq_ann_topk, semantic_dedup,
-    kmeans): the prefilter is exact int64 arithmetic in both kernels,
+    default-to-throughput pattern (semantic_dedup, kmeans): the
+    prefilter is exact int64 arithmetic in both kernels,
     so the twin and the interpreted-HOF reference
     (random_projection_topk, pinned equal by tests/test_round7_ops.py)
     satisfy the SAME oracle."""

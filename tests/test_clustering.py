@@ -59,6 +59,18 @@ def test_assign_clusters_tiebreak(spark):
     assert out[0]["cluster_id"] == 1
 
 
+@pytest.mark.parametrize("n_rows, iters", [(3, 1), (3, 2), (0, 1)])
+def test_kmeans_fewer_rows_than_k_raises(spark, n_rows, iters):
+    """3 rows cannot seed 8 clusters: iters=1 used to return 3 clusters
+    silently, iters=2 and an empty input died with IndexError."""
+    df = spark.createDataFrame(
+        [(i, [float(i), 0.0]) for i in range(n_rows)],
+        "vec_id bigint, embedding array<float>",
+    )
+    with pytest.raises(ValueError, match=f"at least k=8 rows, got {n_rows}"):
+        kmeans_fit_predict(df, k=8, iters=iters)
+
+
 # --- semantic dedup ----------------------------------------------------------
 
 
@@ -103,8 +115,6 @@ def test_kmeans_pandas_twin_bit_identical(spark):
     from airflow_subscription_etl_spark.operators.clustering import (
         assign_clusters,
         assign_clusters_pandas,
-        kmeans_fit_predict,
-        kmeans_fit_predict_pandas,
     )
 
     rows = [(i, [float((i * 7 + j * 3) % 11) / 11.0 for j in range(6)]) for i in range(60)]
@@ -113,6 +123,3 @@ def test_kmeans_pandas_twin_bit_identical(spark):
     a = sorted(map(tuple, assign_clusters(df, cents).collect()))
     b = sorted(map(tuple, assign_clusters_pandas(df, cents).collect()))
     assert a == b
-    fa = sorted(map(tuple, kmeans_fit_predict(df, k=4, iters=2, impl="hof").collect()))
-    fb = sorted(map(tuple, kmeans_fit_predict_pandas(df, k=4, iters=2).collect()))
-    assert fa == fb

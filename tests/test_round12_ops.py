@@ -3,9 +3,6 @@ by the r12 structured review of ``operators/``:
 
 - asof_join stitched together right rows that never existed (per-column
   last(ignorenulls) reached past a NULL attribute of the newest row);
-- lookup_required probed the first dim attribute for NULL instead of a
-  join indicator (false error on legit-NULL attrs, no check at all for
-  key-only dims);
 - sampled_quantile_sketch indexed the null-free sorted array with
   positions from the null-including row count;
 - salted_join silently duplicated unmatched small-side rows ×salt under
@@ -31,7 +28,6 @@ from pyspark.sql import functions as F
 from airflow_subscription_etl_spark.operators import (
     dedup,
     packing,
-    relational,
     scale,
     similarity,
     sketch,
@@ -73,29 +69,6 @@ def test_asof_join_normal_fill_unchanged(spark):
         left, right, "k", "lts", "rts", ["price", "qty"]
     ).collect()[0]
     assert (row["price_asof"], row["qty_asof"]) == (10.0, 5)
-
-
-def test_lookup_required_tolerates_null_dim_attribute(spark):
-    """A MATCHED dim row whose first attribute is legitimately NULL is
-    not a missing match."""
-    fact = spark.createDataFrame([(1, "x")], "pid int, payload string")
-    dim = spark.createDataFrame([(1, None)], "pid int, pname string")
-    out = relational.lookup_required(fact, dim, "pid", "boom")
-    assert out.collect()[0]["pname"] is None
-    assert "__matched" not in out.columns
-
-
-def test_lookup_required_enforces_match_on_key_only_dim(spark):
-    """A key-only dim previously SKIPPED the required check entirely."""
-    fact = spark.createDataFrame([(1,), (2,)], "pid int")
-    dim = spark.createDataFrame([(1,)], "pid int")
-    with pytest.raises(ValueError, match="boom"):
-        relational.lookup_required(fact, dim, "pid", "boom")
-    # all-matched key-only dim passes
-    ok = relational.lookup_required(
-        spark.createDataFrame([(1,)], "pid int"), dim, "pid", "boom"
-    )
-    assert ok.count() == 1
 
 
 def test_sampled_quantiles_ignore_null_values_correctly(spark):

@@ -1,5 +1,6 @@
-"""Round-6 operator work: the MERGE-unified lifecycle writer (VERDICT
-r5 #5) and the plan-lint broadcast-miss rule (VERDICT r5 #6)."""
+"""Round-6 operator work: the lifecycle writer's M2/M3 target-row
+contract (VERDICT r5 #5) and the plan-lint broadcast-miss rule
+(VERDICT r5 #6)."""
 
 from __future__ import annotations
 
@@ -41,44 +42,34 @@ def _sorted_rows(df):
     return sorted(map(tuple, df.collect()))
 
 
-# --- M2/M3 through merge_upsert (one writer interface) ----------------------
+# --- M2/M3 target row ------------------------------------------------------
 
 
-def test_change_merge_equals_projection(spark):
+def test_change_lands_on_latest_active_row(spark):
     subs = _subs(spark)
-    a = M.change_subscription_plan(subs, 102, 3)
-    b = M.change_subscription_plan(subs, 102, 3, strategy="merge")
-    assert a.columns == b.columns
-    assert _sorted_rows(a) == _sorted_rows(b)
-    # and the update actually landed
-    row = [r for r in b.collect() if r["subscription_id"] == 1002][0]
-    assert row["subscription_plan_id"] == 3
+    out = M.change_subscription_plan(subs, 102, 3)
+    assert out.columns == subs.columns
+    by_id = {r["subscription_id"]: r for r in out.collect()}
+    assert by_id[1002]["subscription_plan_id"] == 3
+    assert [by_id[i]["subscription_plan_id"] for i in (1001, 1003, 1004)] == [1, 2, 3]
 
 
-def test_cancel_merge_equals_projection(spark):
+def test_cancel_breaks_start_date_tie_on_id(spark):
     subs = _subs(spark)
-    a = M.cancel_subscription(subs, 101)
-    b = M.cancel_subscription(subs, 101, strategy="merge")
-    assert a.columns == b.columns
-    assert _sorted_rows(a) == _sorted_rows(b)
+    out = M.cancel_subscription(subs, 101)
+    assert out.columns == subs.columns
     # A1 tiebreak: user 101's 1003 (same start_date, higher id) cancels
-    by_id = {r["subscription_id"]: r for r in b.collect()}
+    by_id = {r["subscription_id"]: r for r in out.collect()}
     assert by_id[1003]["subscription_status"] == "inactive"
     assert by_id[1001]["subscription_status"] == "active"
 
 
-def test_merge_strategy_error_paths_match(spark):
+def test_change_and_cancel_without_active_row_raise(spark):
     subs = _subs(spark)
-    for strategy in ("projection", "merge"):
-        with pytest.raises(ValueError, match="No active subscription"):
-            M.change_subscription_plan(subs, 999, 2, strategy=strategy)
-        with pytest.raises(ValueError, match="No active subscription"):
-            M.cancel_subscription(subs, 103, strategy=strategy)  # inactive only
-
-
-def test_unknown_strategy_raises(spark):
-    with pytest.raises(ValueError, match="unknown strategy"):
-        M.cancel_subscription(_subs(spark), 101, strategy="delta")
+    with pytest.raises(ValueError, match="No active subscription"):
+        M.change_subscription_plan(subs, 999, 2)
+    with pytest.raises(ValueError, match="No active subscription"):
+        M.cancel_subscription(subs, 103)  # inactive only
 
 
 @settings(
@@ -103,23 +94,18 @@ def test_unknown_strategy_raises(spark):
     ),
     user=st.integers(100, 104),
 )
-def test_merge_projection_equivalence_property(rows, user):
-    """For ANY table state and user, the two strategies agree (both on
-    the result rows and on whether they raise)."""
+def test_change_matches_model_property(rows, user):
+    """For ANY table state and user, M2 either raises (no active row)
+    or sets plan 3 on exactly the A1 row: latest start_date, tie → id."""
     subs = _spark.createDataFrame(rows, USER_SUBSCRIPTIONS_SCHEMA)
-    try:
-        a = _sorted_rows(M.change_subscription_plan(subs, user, 3))
-        raised_a = None
-    except ValueError as e:
-        raised_a = str(e)
-    try:
-        b = _sorted_rows(M.change_subscription_plan(subs, user, 3, strategy="merge"))
-        raised_b = None
-    except ValueError as e:
-        raised_b = str(e)
-    assert raised_a == raised_b
-    if raised_a is None:
-        assert a == b
+    active = [r for r in rows if r[1] == user and r[3] == "active"]
+    if not active:
+        with pytest.raises(ValueError, match="No active subscription"):
+            M.change_subscription_plan(subs, user, 3)
+        return
+    target = max(active, key=lambda r: (r[4], r[0]))[0]
+    want = sorted(r[:2] + (3,) + r[3:] if r[0] == target else r for r in rows)
+    assert _sorted_rows(M.change_subscription_plan(subs, user, 3)) == want
 
 
 # --- plan_lint broadcast-miss rule ------------------------------------------
@@ -182,10 +168,10 @@ def test_broadcast_idiom_stays_clean(spark):
     assert "broadcast-miss" not in plan_lint.lint_plan(plan)
 
 
-# --- semantic_dedup impl dispatch (r5 verdict perf note) --------------------
+# --- semantic_dedup keep-rule -----------------------------------------------
 
 
-def test_semantic_dedup_impls_bit_identical(spark):
+def test_semantic_dedup_drops_planted_copies(spark):
     from airflow_subscription_etl_spark.operators.clustering import semantic_dedup
 
     rows = [
@@ -194,18 +180,10 @@ def test_semantic_dedup_impls_bit_identical(spark):
     ] + [(1000 + i, [float((i * 13 + j * 5) % 17) / 17.0 for j in range(8)])
          for i in range(10)]  # planted near-identical copies
     df = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
-    a = sorted(map(tuple, semantic_dedup(df, k=4, threshold=0.45, impl="hof").collect()))
-    b = sorted(map(tuple, semantic_dedup(df, k=4, threshold=0.45).collect()))
-    assert a == b
-    assert any(r[2] for r in b)  # some vector actually dropped
-
-
-def test_semantic_dedup_bad_impl_raises(spark):
-    from airflow_subscription_etl_spark.operators.clustering import semantic_dedup
-
-    df = spark.createDataFrame([(1, [0.0] * 8)], "vec_id bigint, embedding array<float>")
-    with pytest.raises(ValueError, match="impl"):
-        semantic_dedup(df, impl="numpy")
+    out = {r[0]: r[2] for r in semantic_dedup(df, k=4, threshold=0.45).collect()}
+    # an exact copy shares its original's cluster and loses to its lower id
+    assert all(out[1000 + i] for i in range(10))
+    assert not out[0]
 
 
 def test_broadcast_miss_not_fooled_by_bound_below_join(_nobroadcast):
@@ -223,14 +201,6 @@ def test_broadcast_miss_not_fooled_by_bound_below_join(_nobroadcast):
     plan = plan_lint.render_plan(side.join(big2, "k"))
     assert "SortMergeJoin" in plan  # precondition: it IS a big-big SMJ
     assert "broadcast-miss" not in plan_lint.lint_plan(plan)
-
-
-def test_bad_strategy_fails_fast_even_without_target(spark):
-    """Strategy validation precedes the A1 lookup: a typo'd strategy
-    surfaces as 'unknown strategy' even for a user with no active
-    subscription (review finding r6)."""
-    with pytest.raises(ValueError, match="unknown strategy"):
-        M.change_subscription_plan(_subs(spark), 999, 2, strategy="mrege")
 
 
 # --- doc_minhash_indexed registered query -----------------------------------

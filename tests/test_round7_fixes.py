@@ -8,13 +8,9 @@ import ast
 import pathlib
 
 import numpy as np
-import pytest
 
 import bench
-from airflow_subscription_etl_spark.operators.clustering import (
-    _round_like_spark,
-    kmeans_fit_predict,
-)
+from airflow_subscription_etl_spark.operators.clustering import _round_like_spark
 from airflow_subscription_etl_spark.oracles.lsh_ref import _round_half_up_spark
 
 ROOT = pathlib.Path(__file__).resolve().parent.parent
@@ -123,25 +119,3 @@ def test_round_like_spark_small_magnitude_unchanged():
     got = _round_like_spark(raw.copy())
     want = np.array([_round_half_up_spark(float(v)) for v in raw], dtype=np.int64)
     assert (got == want).all()
-
-
-# --- kmeans_fit_predict impl dispatch (verdict r6 #4) -----------------------
-
-
-def test_kmeans_fit_predict_default_is_pandas_and_hof_matches(spark):
-    rows = [(i, [float((i * 7 + d * 3) % 11) / 10.0 for d in range(4)]) for i in range(40)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    default = sorted(map(tuple, kmeans_fit_predict(df, k=4, iters=2).collect()))
-    hof = sorted(
-        map(tuple, kmeans_fit_predict(df, k=4, iters=2, impl="hof").collect())
-    )
-    pandas = sorted(
-        map(tuple, kmeans_fit_predict(df, k=4, iters=2, impl="pandas").collect())
-    )
-    assert default == pandas == hof
-
-
-def test_kmeans_fit_predict_rejects_unknown_impl(spark):
-    df = spark.createDataFrame([(1, [0.0])], "vec_id long, embedding array<float>")
-    with pytest.raises(ValueError, match="impl"):
-        kmeans_fit_predict(df, impl="arrow")
